@@ -2171,6 +2171,20 @@ def recompute_centroids(
     )
 
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _check_columns(df: DataFrame, arg: str, want: dict[str, tuple]) -> None:
+    """Raise TypeError unless every column in ``want`` is in ``df`` with
+    one of the listed types (schema only — no Spark job)."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    for col, ok in want.items():
+        if types.get(col) not in ok:
+            raise TypeError(
+                f"{arg}.{col} is {types.get(col, 'missing')}; expected {ok}"
+            )
+
+
 def mmr_diversified_topk(
     embeddings: DataFrame,
     query_ids: list[int],
@@ -2200,12 +2214,30 @@ def mmr_diversified_topk(
     so it runs as ONE grouped Arrow kernel (``applyInPandas`` by
     query_id) — sequential-fold similarities and the identical score
     expression in-kernel, one shuffle, one job after the corpus stage.
+
+    Injected-frame contract: ``shortlist_df`` is (query_id, corpus_id:
+    integral, rel: double) with at most ``shortlist`` rows per query;
+    ``vectors_df`` is (corpus_id: integral, cvec: array<double>, cnrm:
+    double) with one row per corpus id.  Schemas are checked here, at
+    build time (TypeError); the row bound is checked per query inside
+    the grouped kernel (the job fails with a ValueError), so it adds no
+    Spark job.
     """
     import numpy as np
     import pandas as pd
 
+    if shortlist_df is not None:
+        _check_columns(shortlist_df, "shortlist_df", {
+            "query_id": _INTEGRAL, "corpus_id": _INTEGRAL, "rel": ("double",),
+        })
+    if vectors_df is not None:
+        _check_columns(vectors_df, "vectors_df", {
+            "corpus_id": _INTEGRAL, "cvec": ("array<double>",),
+            "cnrm": ("double",),
+        })
     one_minus = 1.0 - lam
     kk = int(k)
+    max_rows = int(shortlist)
     # the |Q|·S shortlist feeds TWO subtrees (the distinct-corpus-id
     # broadcast and the probe side) — checkpoint it so the corpus-sized
     # brute_force_topk stage runs once, not once per subtree.
@@ -2261,6 +2293,11 @@ def mmr_diversified_topk(
                 {"query_id": [], "corpus_id": [], "mmr_rank": [], "mmr_score": []}
             )
         qid = int(pdf["query_id"].iloc[0])
+        if len(pdf) > max_rows:
+            raise ValueError(
+                f"mmr_diversified_topk: query {qid} has {len(pdf)} "
+                f"shortlist rows, more than shortlist={max_rows}"
+            )
         cid = pdf["corpus_id"].to_numpy(dtype=np.int64)
         rel = pdf["rel"].to_numpy(dtype=np.float64)
         V = np.array(list(pdf["cvec"]), dtype=np.float64)

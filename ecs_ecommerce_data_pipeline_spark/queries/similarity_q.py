@@ -282,19 +282,46 @@ def _ivf_index_path(sf_dir: str) -> str:
 # then measure QUERY cost, as a production serving path would, instead
 # of charging a fresh index build to every call (round-5 advisory note
 # on sim_ivf_index_query).  Keyed by applicationId so a stale session's
-# DataFrames are never reused; tempdir-per-process keeps cross-process
-# runs isolated.  The BUILD and APPEND catalog entries
-# (sim_ivf_index_build / _incremental) stay hermetic per call — building
-# is the thing they verify.
-_IVFPQ_CACHE: dict[tuple[str, str], tuple] = {}
+# DataFrames are never reused, and by the embeddings files' stamp so a
+# table rewritten under the same directory rebuilds instead of serving
+# the old index; tempdir-per-process keeps cross-process runs isolated.
+# The BUILD and APPEND catalog entries (sim_ivf_index_build /
+# _incremental) stay hermetic per call — building is the thing they
+# verify.
+_IVFPQ_CACHE: dict[tuple, tuple] = {}
+
+
+def _table_stamp(sf_dir: str, name: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file of one testdata
+    table — a single parquet file or a directory of parts."""
+    import os as _os
+
+    path = _os.path.join(sf_dir, f"{name}.parquet")
+    if _os.path.isfile(path):
+        st = _os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    stamp = []
+    for dirpath, _, files in _os.walk(path):
+        for f in files:
+            fp = _os.path.join(dirpath, f)
+            st = _os.stat(fp)
+            stamp.append((_os.path.relpath(fp, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamp))
+
+
+def _cache_key(spark: SparkSession, sf_dir: str, *variant) -> tuple:
+    import os as _os
+
+    return (
+        spark.sparkContext.applicationId, _os.path.abspath(sf_dir),
+        _table_stamp(sf_dir, "embeddings"), *variant,
+    )
 
 
 def _ivfpq_index_cached(
     spark: SparkSession, sf_dir: str, residual: bool = False
 ):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), residual)
+    key = _cache_key(spark, sf_dir, residual)
     hit = _IVFPQ_CACHE.get(key)
     if hit is None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -1855,12 +1882,7 @@ def _clustered_index_cached(
     fixed (training-free), trained (1 Lloyd iteration on coarse AND
     codebook), and fps-seeded-trained variants share the serving-cost
     measurement discipline of ``_ivfpq_index_cached``."""
-    import os as _os
-
-    key = (
-        spark.sparkContext.applicationId, _os.path.abspath(sf_dir),
-        trained, seed,
-    )
+    key = _cache_key(spark, sf_dir, trained, seed)
     hit = _CL_CACHE.get(key)
     if hit is None:
         hit = similarity.build_ivfpq_index(
@@ -5147,9 +5169,7 @@ def _clustered_index64_cached(spark: SparkSession, sf_dir: str):
     residual PQ — ``build_ivfpq_index(n_centroids=64, coarse_iters=1,
     train_iters=1, residual=True, coarse_seed="kmeans_par")`` (which
     derives l = 2k = 128, rounds = 3)."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "kp64")
+    key = _cache_key(spark, sf_dir, "kp64")
     hit = _CL_CACHE.get(key)
     if hit is None:
         # the filter attribute (geometry-UNcorrelated id hash — the

@@ -29,13 +29,6 @@ def get_spark(
     100 TB ones — at scale set it ~2-3x total executor cores, or rely on AQE
     coalescing from a high initial value).
     """
-    # vendored-protobuf fallback must be on PYTHONPATH BEFORE the JVM
-    # launches so forked python workers inherit it (the
-    # transformWithStateInPandas transport needs google.protobuf on the
-    # worker side too)
-    from .protobuf_shim import ensure_protobuf
-
-    ensure_protobuf()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"

@@ -195,6 +195,13 @@ def daily_kpi_commit_stream(
     stamping.  ``_pre_claim_hook`` is the deterministic race seam
     (first attempt only), as in the batch sink's tests.
 
+    Checkpoint compatibility: the per-day state is kept by
+    ``applyInPandasWithState``.  A checkpoint written while this sink
+    ran on the former ``transformWithState`` (TWS) transport cannot
+    be resumed — restart from a fresh ``checkpoint_dir``; the sink's
+    replace-by-``date_key`` merge then re-lands each day's rows as the
+    new stream re-folds them.
+
     Scale: per trigger the sink moves one row per TOUCHED day and
     rewrites only those days' partitions — O(affected days), never
     O(history); the state store carries O(days × users/day).

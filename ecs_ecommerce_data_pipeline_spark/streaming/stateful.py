@@ -12,6 +12,12 @@ each micro-batch shuffles only that batch's rows to their key's
 partition (state itself never moves). Keys with no new rows cost
 nothing. State size is O(distinct keys × state row width) — for the
 running-totals operator below, two numbers per user.
+
+Every operator here has exactly one transport, ``applyInPandasWithState``
+on the session's configured state store (HDFS-backed by default).
+Checkpoints written by the former ``transformWithState`` (TWS)
+transport (RocksDB store, typed state variables) cannot be resumed by
+these operators: restart such a query from a fresh checkpoint location.
 """
 
 from __future__ import annotations
@@ -222,45 +228,6 @@ def _parse_gap_ms(gap: str) -> int:
     return int(qty) * mult
 
 
-import importlib.util
-
-# transformWithStateInPandas speaks protobuf to the JVM state server;
-# absent the package, only the applyInPandasWithState transport works.
-# Round 11: the engine VENDORS a minimal pure-python protobuf runtime
-# (``_vendor/`` — wire format + descriptor parsing from the public
-# specs), so this gate now self-activates instead of permanently
-# falling back in protobuf-less environments.  A real protobuf install
-# on sys.path always wins over the vendored one.
-from ..protobuf_shim import ensure_protobuf as _ensure_protobuf
-
-_ensure_protobuf()
-try:  # find_spec raises if the parent "google" package is absent
-    HAS_TWS_PROTO = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    HAS_TWS_PROTO = False
-
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-def _ensure_tws_store_conf(df: DataFrame) -> None:
-    """``transformWithStateInPandas`` requires the RocksDB state store
-    provider (Spark 4 bundles rocksdbjni); switch the session off the
-    HDFS default when a TWS operator is planned — the conf binds at
-    query START, so plan-build time is early enough.  An explicitly
-    user-configured provider is left alone."""
-    spark = df.sparkSession
-    try:
-        cur = spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-    except Exception:
-        cur = ""
-    if not cur or cur.endswith("HDFSBackedStateStoreProvider"):
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
-
 TOPK_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -271,86 +238,6 @@ TOPK_SCHEMA = StructType(
 )
 
 
-def user_topk_events(events: DataFrame, k: int = 3) -> DataFrame:
-    """Per-user top-k events by value, maintained across micro-batches
-    with the Spark 4 ``transformWithStateInPandas`` API (ListState).
-
-    The successor API to ``applyInPandasWithState``: typed state
-    variables (value/list/map, optional TTL) on a processor object
-    instead of one opaque tuple. The list state holds AT MOST k rows per
-    user — each batch merges its rows into the kept top-k and re-emits
-    the key's current leaderboard (update mode), so state size is
-    O(keys · k) regardless of stream length, and dormant keys cost
-    nothing per batch.
-
-    Determinism: ordering is (value desc, event_id asc) — a total order,
-    so the leaderboard is independent of batch arrival interleaving
-    within the same event set.
-
-    Environment gate: the transformWithState protocol serializes state
-    over protobuf; since round 11 the engine VENDORS a minimal runtime
-    (``_vendor/``), so the primary transport executes even where no
-    protobuf distribution exists.  Should activation still fail, the
-    operator transparently falls back to ``user_topk_events_legacy`` —
-    same semantics, applyInPandasWithState transport — and records
-    which path ran in ``user_topk_events.api``.
-    """
-    if not HAS_TWS_PROTO:
-        user_topk_events.api = "applyInPandasWithState"
-        return user_topk_events_legacy(events, k)
-    user_topk_events.api = "transformWithStateInPandas"
-    _ensure_tws_store_conf(events)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    kk = int(k)
-
-    class _TopK(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._top = handle.getListState(
-                "topk", "event_id long, value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            cur: list[tuple[int, float]] = []
-            if self._top.exists():
-                for row in self._top.get():
-                    cur.append((int(row[0]), float(row[1])))
-            for pdf in rows:
-                for eid, val in zip(pdf["event_id"], pdf["value"]):
-                    cur.append((int(eid), 0.0 if pd.isna(val) else float(val)))
-            cur.sort(key=lambda t: (-t[1], t[0]))
-            cur = cur[:kk]
-            self._top.put([(eid, val) for eid, val in cur])
-            uid = int(key[0])
-            yield pd.DataFrame(
-                {
-                    "user_id": [uid] * len(cur),
-                    "rnk": list(range(1, len(cur) + 1)),
-                    "event_id": [eid for eid, _ in cur],
-                    "value": [val for _, val in cur],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "event_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _TopK(),
-            outputStructType=TOPK_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 _TOPK_STATE_SCHEMA = StructType(
     [
         StructField("event_ids", ArrayType(LongType())),
@@ -359,10 +246,19 @@ _TOPK_STATE_SCHEMA = StructType(
 )
 
 
-def user_topk_events_legacy(events: DataFrame, k: int = 3) -> DataFrame:
-    """applyInPandasWithState transport for the per-user top-k
-    leaderboard — bit-identical semantics to ``user_topk_events``'s
-    transformWithState path (same total order, same k-bounded state)."""
+def user_topk_events(events: DataFrame, k: int = 3) -> DataFrame:
+    """Per-user top-k events by value, maintained across micro-batches.
+
+    The per-key state holds AT MOST k (event_id, value) pairs as two
+    parallel arrays — each batch merges its rows into the kept top-k
+    and re-emits the key's current leaderboard (update mode), so state
+    size is O(keys · k) regardless of stream length, and dormant keys
+    cost nothing per batch.
+
+    Determinism: ordering is (value desc, event_id asc) — a total order,
+    so the leaderboard is independent of batch arrival interleaving
+    within the same event set.
+    """
     kk = int(k)
 
     def update(key, pdfs, state):
@@ -401,7 +297,7 @@ def user_topk_events_legacy(events: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-# --- running daily KPIs on the processor API (round-10 verdict task 6) ------
+# --- running daily KPIs in the engine's keyed state store ------------------
 
 DAILY_KPI_SCHEMA = StructType(
     [
@@ -426,8 +322,8 @@ _DAILY_KPI_STATE_SCHEMA = StructType(
 
 
 def _fold_daily_kpi(cur, pdfs):
-    """Shared per-key fold for both transports: (orders, revenue_cents,
-    items, returned, user_id set) ← one micro-batch's tagged rows.
+    """Per-key fold: (orders, revenue_cents, items, returned, user_id
+    set) ← one micro-batch's tagged rows.
 
     Vectorized over each Arrow-delivered frame (round-11, closing the
     round-10 verdict's residual note: the per-row Python loop was legal
@@ -472,82 +368,8 @@ def daily_kpi_running(rows: DataFrame) -> DataFrame:
     per day equals ``daily_kpis`` on the full input — counts and cents
     are exact integers, so equality is bitwise.
 
-    Transport: ``transformWithStateInPandas`` (ValueState for the four
-    integers + ListState for the user-id set; the user-id list is only
-    ``put`` when non-empty — the state server refuses empty list
-    writes, and an empty set means there is no user state to
-    overwrite).  ``google.protobuf`` resolves via the vendored runtime
-    (``_vendor/``) where no real distribution exists (round 11 — both
-    transports now execute; ``tests/test_round11_tws_transport.py``
-    pins their equality); the semantically-identical
-    ``applyInPandasWithState`` fallback remains, and
-    ``daily_kpi_running.api`` records which path ran (the
-    ``user_topk_events`` discipline)."""
-    if not HAS_TWS_PROTO:
-        daily_kpi_running.api = "applyInPandasWithState"
-        return daily_kpi_running_legacy(rows)
-    daily_kpi_running.api = "transformWithStateInPandas"
-    _ensure_tws_store_conf(rows)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _DailyKpi(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState(
-                "agg",
-                "total_orders long, revenue_cents long, items long, "
-                "returned long",
-            )
-            self._users = handle.getListState("users", "user_id long")
-
-        def handleInputRows(self, key, pdfs, timerValues):
-            users: set[int] = set()
-            if self._users.exists():
-                for row in self._users.get():
-                    users.add(int(row[0]))
-            cur = (0, 0, 0, 0, users)
-            if self._agg.exists():
-                o, r, i, t = self._agg.get()
-                cur = (int(o), int(r), int(i), int(t), users)
-            orders, revenue, items, returned, users = _fold_daily_kpi(
-                cur, pdfs
-            )
-            self._agg.update((orders, revenue, items, returned))
-            if users:  # ListState refuses empty puts; the set only grows,
-                # so empty means no user state exists to overwrite
-                self._users.put([(u,) for u in sorted(users)])
-            yield pd.DataFrame(
-                {
-                    "date_key": [str(key[0])],
-                    "total_orders": [orders],
-                    "total_revenue_cents": [revenue],
-                    "total_items_sold": [items],
-                    "returned_orders": [returned],
-                    "unique_customers": [len(users)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        rows.select("date_key", "kind", "user_id", "revenue_cents", "returned")
-        .groupBy("date_key")
-        .transformWithStateInPandas(
-            _DailyKpi(),
-            outputStructType=DAILY_KPI_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def daily_kpi_running_legacy(rows: DataFrame) -> DataFrame:
-    """applyInPandasWithState transport for :func:`daily_kpi_running` —
-    identical fold, the user-id set rides the state tuple as a sorted
-    array."""
+    State per day: the four integers plus the user-id set as a sorted
+    array, one struct rewritten per touched day per trigger."""
 
     def update(key, pdfs, state):
         cur = (0, 0, 0, 0, set())
@@ -646,103 +468,21 @@ _SPEND_STATE_SCHEMA = StructType(
 def user_category_spend_running(
     rows: DataFrame, emit_full_map: bool = False
 ) -> DataFrame:
-    """Running per-(user, category) spend on keyed MAP state — the
-    MapState face of the engine's stateful family (round 11; unlocked
-    by the vendored protobuf runtime that makes the
-    ``transformWithStateInPandas`` transport executable here).
+    """Running per-(user, category) spend on keyed state.
 
-    Why MapState and not a tuple: ``applyInPandasWithState`` carries ONE
-    typed struct per key, so a per-user map (category → totals) must be
-    shoehorned into parallel arrays rewritten wholesale every trigger;
-    TWS ``MapState`` gives the state store the MAP directly — per-entry
-    point reads/writes (``getValue``/``updateValue``), and the trigger
-    touches only the categories present in the batch, O(batch) state
-    I/O however many categories a user accumulates.  The fallback
-    transport (recorded in ``user_category_spend_running.api``) keeps
-    the parallel-array emulation for environments without the primary
-    path — semantics pinned identical in
-    ``tests/test_round11_tws_transport.py``.
+    The state carries ONE struct per user, so the per-user map
+    (category → totals) rides as parallel sorted arrays rewritten
+    wholesale every trigger the user is touched — state I/O is
+    O(categories of that user) per touched user.
 
     Input grain: one row per purchased item/order line —
     (user_id, category, spend_cents).  Emission (update mode): for
     every (user, category) touched this trigger, that category's
     current running (orders, spend_cents); with ``emit_full_map`` the
-    whole map re-emits per touched user (exercising the map-iterator
-    protocol — bounded by that user's category count).
+    whole map re-emits per touched user (bounded by that user's
+    category count).  Pinned against a batch ``groupBy`` in
+    ``tests/test_stateful_fixtures.py``.
     """
-    if not HAS_TWS_PROTO:
-        user_category_spend_running.api = "applyInPandasWithState"
-        return _user_category_spend_legacy(rows, emit_full_map)
-    user_category_spend_running.api = "transformWithStateInPandas"
-    _ensure_tws_store_conf(rows)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    full = bool(emit_full_map)
-
-    class _Spend(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._m = handle.getMapState(
-                "spend", "category string", "orders long, cents long"
-            )
-
-        def handleInputRows(self, key, pdfs, timerValues):
-            touched: dict[str, tuple[int, int]] = {}
-            for pdf in pdfs:
-                for cat, cents in zip(pdf["category"], pdf["spend_cents"]):
-                    o, c = touched.get(str(cat), (0, 0))
-                    touched[str(cat)] = (o + 1, c + int(cents))
-            for cat in sorted(touched):
-                do, dc = touched[cat]
-                prev = self._m.getValue((cat,))
-                po, pc = (
-                    (int(prev[0]), int(prev[1])) if prev is not None else (0, 0)
-                )
-                self._m.updateValue((cat,), (po + do, pc + dc))
-            uid = int(key[0])
-            if full:
-                snap = sorted(
-                    (str(k[0]), int(v[0]), int(v[1]))
-                    for k, v in self._m.iterator()
-                )
-            else:
-                snap = []
-                for cat in sorted(touched):
-                    cur = self._m.getValue((cat,))
-                    snap.append((cat, int(cur[0]), int(cur[1])))
-            yield pd.DataFrame(
-                {
-                    "user_id": [uid] * len(snap),
-                    "category": [s[0] for s in snap],
-                    "orders": [s[1] for s in snap],
-                    "spend_cents": [s[2] for s in snap],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        rows.select("user_id", "category", "spend_cents")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _Spend(),
-            outputStructType=SPEND_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def _user_category_spend_legacy(
-    rows: DataFrame, emit_full_map: bool = False
-) -> DataFrame:
-    """applyInPandasWithState transport for
-    :func:`user_category_spend_running` — the per-user map emulated as
-    parallel sorted arrays in the single state struct (the whole map
-    rewrites every trigger: exactly the cost MapState removes)."""
     full = bool(emit_full_map)
 
     def update(key, pdfs, state: GroupState):
@@ -788,119 +528,4 @@ def _user_category_spend_legacy(
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-def user_sessions_tws(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Gap-based sessionizer on the TWS TIMER API — the event-time-timer
-    face of :func:`user_sessions_stateful` (round 11; executable here
-    because the vendored protobuf runtime unlocked the
-    ``transformWithStateInPandas`` transport, whose timer protocol —
-    register/list/delete + ``handleExpiredTimer`` — has no
-    ``applyInPandasWithState`` equivalent beyond the single
-    per-key timeout).
-
-    Semantics are the stateful sessionizer's, unchanged: every batch
-    emits the OPEN session per touched user (``closed = false``);
-    sessions split when a new event arrives ``gap`` after the last; the
-    watermark passing ``last + gap`` fires the key's event-time timer
-    and ``handleExpiredTimer`` emits the final ``closed = true`` row
-    and evicts the state — dormant keys cost nothing, state tracks
-    concurrent activity.  One timer per key at a time (the previous
-    registration is deleted via ``listTimers``— exercising the timer
-    list/delete protocol — before the new one lands).
-
-    Falls back to :func:`user_sessions_stateful` (identical output
-    contract) where the TWS transport is unavailable;
-    ``user_sessions_tws.api`` records which path ran.
-
-    Watermark contract: callers must ``withWatermark("ts", …)`` before
-    this operator — EventTime timeMode requires it.
-    """
-    if not HAS_TWS_PROTO:
-        user_sessions_tws.api = "applyInPandasWithState"
-        return user_sessions_stateful(events, gap)
-    user_sessions_tws.api = "transformWithStateInPandas"
-    _ensure_tws_store_conf(events)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_ms = _parse_gap_ms(gap)
-
-    class _Sessions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._s = handle.getValueState(
-                "sess", "start_ms long, last_ms long, n long"
-            )
-
-        def handleInputRows(self, key, pdfs, timerValues):
-            ts: list[int] = []
-            for pdf in pdfs:
-                ts.extend(int(v) for v in pdf["ts_ms"])
-            ts.sort()
-            if not ts and not self._s.exists():
-                return
-            rows = []
-            if self._s.exists():
-                start, last, n = (int(v) for v in self._s.get())
-            else:
-                start, last, n = ts[0], ts[0] - 1, 0
-            for t in ts:
-                if t <= last:
-                    # late arrival inside the open session: count it,
-                    # never move `last` backward (the stateful twin's
-                    # contract — a regressed last would split the
-                    # session and register a timer below the watermark)
-                    n += 1
-                    continue
-                if t - last > gap_ms and n > 0:
-                    rows.append((int(key[0]), start, last, n, True))
-                    start, n = t, 0
-                last = t
-                n += 1
-            self._s.update((start, last, n))
-            # one live timer per key: clear previous registrations
-            # (list+delete — the timer-protocol paths), then arm at
-            # last + gap, clamped above the current watermark
-            for t_old in list(self._handle.listTimers()):
-                self._handle.deleteTimer(t_old)
-            self._handle.registerTimer(
-                max(last + gap_ms, timerValues.getCurrentWatermarkInMs() + 1)
-            )
-            rows.append((int(key[0]), start, last, n, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "user_id", "session_start_ms", "session_end_ms",
-                    "n_events", "closed",
-                ],
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            if not self._s.exists():
-                return
-            start, last, n = (int(v) for v in self._s.get())
-            self._s.clear()
-            yield pd.DataFrame(
-                [(int(key[0]), start, last, n, True)],
-                columns=[
-                    "user_id", "session_start_ms", "session_end_ms",
-                    "n_events", "closed",
-                ],
-            )
-
-        def close(self) -> None:
-            pass
-
-    prepared = events.select(
-        "user_id", "ts", F.unix_millis(F.col("ts")).alias("ts_ms")
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        _Sessions(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="Update",
-        timeMode="EventTime",
     )

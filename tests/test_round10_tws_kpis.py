@@ -1,13 +1,11 @@
-"""Round-10: the running daily-KPI aggregation on the processor API
+"""Round-10: the running daily-KPI aggregation in the keyed state store
 (verdict task 6).
 
 ``kpi_state_stream`` folds partial-aggregate state into a parquet table
 by hand inside ``foreachBatch`` (ledger + ``_applied_batch`` stamps +
 dynamic-overwrite choreography).  ``stateful.daily_kpi_running`` moves
-that state INTO the engine's keyed state store via
-``transformWithStateInPandas`` (ValueState + ListState), with the
-semantically-identical ``applyInPandasWithState`` fallback where
-protobuf is absent (this container).  Pinned here:
+that state INTO the engine's keyed state store
+(``applyInPandasWithState``).  Pinned here:
 
 * fold-equals-batch: streaming the ``daily_kpi_rows`` grain in
   arbitrary micro-batch splits ends, per day, at exactly
@@ -15,9 +13,7 @@ protobuf is absent (this container).  Pinned here:
   returned counts and revenue CENTS bitwise equal, return-rate the
   same double division;
 * exact cross-batch distinct: the same customer ordering twice on one
-  day in two different batches counts once (the user-id set state);
-* the operator records which transport ran (the ``user_topk_events``
-  environment-gate discipline).
+  day in two different batches counts once (the user-id set state).
 """
 
 from __future__ import annotations
@@ -73,10 +69,8 @@ def _run_stream(spark, tmp_path, rows_df, name, n_files=3):
 def test_daily_kpi_running_fold_equals_batch(spark, tmp_path):
     from ecs_ecommerce_data_pipeline_spark.operators import kpis
     from ecs_ecommerce_data_pipeline_spark.sources.testdata import ecommerce_views
-    from ecs_ecommerce_data_pipeline_spark.streaming import stateful as st
     from ecs_ecommerce_data_pipeline_spark.streaming.stateful import (
         daily_kpi_rows,
-        daily_kpi_running,
     )
 
     t = ecommerce_views(spark, SF)
@@ -85,13 +79,6 @@ def test_daily_kpi_running_fold_equals_batch(spark, tmp_path):
 
     final, n_batches = _run_stream(spark, tmp_path, rows, "kpi_tws")
     assert n_batches >= 3  # the fold actually crossed micro-batches
-
-    want_api = (
-        "transformWithStateInPandas"
-        if st.HAS_TWS_PROTO
-        else "applyInPandasWithState"
-    )
-    assert daily_kpi_running.api == want_api
 
     batch = {
         str(r["date_key"]): r

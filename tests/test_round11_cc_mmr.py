@@ -119,3 +119,62 @@ def test_mmr_kernel_matches_greedy_reference(spark):
     assert [(q, r, c) for q, r, c, _ in got] == [(q, r, c) for q, r, c, _ in expect]
     for (_, _, _, s_got), (_, _, _, s_exp) in zip(got, expect):
         assert abs(s_got - s_exp) < 1e-12
+
+
+def _mmr_inputs(spark):
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (9, [0.5, 0.2])],
+        "vec_id bigint, embedding array<double>",
+    )
+    vectors = spark.createDataFrame(
+        [(c, [1.0, float(c)], (1.0 + c * c) ** 0.5) for c in (0, 1, 2)],
+        "corpus_id bigint, cvec array<double>, cnrm double",
+    )
+    return emb, vectors
+
+
+def test_mmr_injected_frames_schema_checked_at_build(spark):
+    import pytest
+
+    from ecs_ecommerce_data_pipeline_spark.operators.similarity import (
+        mmr_diversified_topk,
+    )
+
+    emb, vectors = _mmr_inputs(spark)
+    sl = spark.createDataFrame(
+        [(9, 0, 0.9), (9, 1, 0.5)], "query_id bigint, corpus_id bigint, rel double"
+    )
+    with pytest.raises(TypeError, match=r"shortlist_df\.rel is missing"):
+        mmr_diversified_topk(
+            emb, [9], k=1, shortlist=2,
+            shortlist_df=sl.withColumnRenamed("rel", "score"),
+            vectors_df=vectors,
+        )
+    with pytest.raises(TypeError, match=r"vectors_df\.cvec is array<string>"):
+        mmr_diversified_topk(
+            emb, [9], k=1, shortlist=2, shortlist_df=sl,
+            vectors_df=vectors.withColumn("cvec", vectors["cvec"].cast("array<string>")),
+        )
+
+
+def test_mmr_injected_shortlist_row_bound_enforced_in_kernel(spark):
+    import pytest
+
+    from ecs_ecommerce_data_pipeline_spark.operators.similarity import (
+        mmr_diversified_topk,
+    )
+
+    emb, vectors = _mmr_inputs(spark)
+    sl = spark.createDataFrame(
+        [(9, 0, 0.9), (9, 1, 0.5), (9, 2, 0.7)],
+        "query_id bigint, corpus_id bigint, rel double",
+    )
+    # within the bound the injected frames are consumed as given
+    got = mmr_diversified_topk(
+        emb, [9], k=1, shortlist=3, shortlist_df=sl, vectors_df=vectors
+    ).collect()
+    assert [(r.corpus_id, r.mmr_rank) for r in got] == [(0, 1)]
+    with pytest.raises(Exception, match="query 9 has 3 shortlist rows, more than shortlist=2"):
+        mmr_diversified_topk(
+            emb, [9], k=1, shortlist=2, shortlist_df=sl, vectors_df=vectors
+        ).collect()

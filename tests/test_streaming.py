@@ -462,10 +462,7 @@ def test_streaming_psi_drift_monitor(spark, tmp_path):
 
 
 def test_transform_with_state_topk_multi_batch(spark, tmp_path):
-    """Per-user top-k leaderboard folded across micro-batches — the
-    transformWithStateInPandas path when protobuf is available, else the
-    semantically-identical applyInPandasWithState fallback (this
-    container lacks protobuf; the operator records which path ran)."""
+    """Per-user top-k leaderboard folded across micro-batches."""
     from pyspark.sql import functions as F
 
     from ecs_ecommerce_data_pipeline_spark.sources.testdata import load_table
@@ -473,11 +470,6 @@ def test_transform_with_state_topk_multi_batch(spark, tmp_path):
         user_topk_events,
     )
 
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     batch = load_table(spark, SF, "events").select("user_id", "event_id", "value")
     src = str(tmp_path / "topk_parts")
     batch.repartition(3).write.parquet(src)
@@ -500,15 +492,6 @@ def test_transform_with_state_topk_multi_batch(spark, tmp_path):
     finally:
         q.stop()
     assert n_batches >= 3
-
-    from ecs_ecommerce_data_pipeline_spark.streaming import stateful as _st
-
-    want_api = (
-        "transformWithStateInPandas"
-        if _st.HAS_TWS_PROTO
-        else "applyInPandasWithState"
-    )
-    assert user_topk_events.api == want_api
 
     # last emission per user wins (update mode); emissions are totally
     # ordered per user by the set of events folded so far, and each one
