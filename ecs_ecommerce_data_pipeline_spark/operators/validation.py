@@ -10,11 +10,14 @@ The engine re-expresses that as ``validate(...) → ValidationResult`` — a
 pure, distributed operator (SURVEY §3.3):
 
 * **required-column check** — a schema (metadata) predicate, no data pass;
-* **null counts** — ONE aggregate pass over all critical columns
-  (``sum(col IS NULL)`` per column), instead of pandas per-column scans;
-* **referential integrity** — ``left_anti`` joins (reference J5/J6 are
-  pandas ``~isin``); the anti-join shuffles on the FK, or broadcasts when
-  the PK side is a dimension;
+* **null counts** — one ``sum(col IS NULL)`` aggregate per table over
+  all its critical columns, instead of pandas per-column scans;
+* **referential integrity** — orphan counts from left joins against the
+  distinct parent keys (reference J5/J6 are pandas ``~isin``); the join
+  shuffles on the FK, or broadcasts when the PK side is a dimension.
+  ``validate_batch`` folds every null count and both orphan counts into
+  ONE collected row; the ``left_anti`` :func:`orphan_keys` samples run
+  only for a failing check;
 * **quarantine, not file moves** — rejected rows/files become DataFrames
   with a ``reason`` column (the reference's ``_reason.json`` sidecar,
   validate_task.py:101-110, as data).
@@ -25,10 +28,13 @@ RI checks are the only shuffles, and they prune to the FK column only.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -45,18 +51,6 @@ class ValidationResult:
 def missing_required(df: DataFrame, required: list[str]) -> list[str]:
     """Reference validate_task.py:153-159 — schema-level, no data pass."""
     return [c for c in required if c not in df.columns]
-
-
-def null_counts(df: DataFrame, critical: list[str]) -> dict[str, int]:
-    """Null count per critical column in ONE aggregate pass
-    (reference validate_task.py:161-177 loops pandas ``isnull().sum()``)."""
-    present = [c for c in critical if c in df.columns]
-    if not present:
-        return {}
-    row = df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in present]
-    ).collect()[0]
-    return {c: int(row[c] or 0) for c in present}
 
 
 def orphan_keys(
@@ -89,6 +83,17 @@ def validate_batch(
     """Full batch validation mirroring validate_task.main() semantics:
     schema → nulls → referential integrity, with the reference's
     first-failure reasons, but computed distributed and without file moves.
+
+    A passing batch costs ONE Spark action: every table's critical-column
+    null counts and both FK orphan counts come back in a single one-row
+    collect — ``order_items`` left-joined to the distinct
+    ``orders.order_id``s and to the broadcast distinct ``products.id``s
+    (the parents are distinct, so the joins never multiply item rows),
+    cross-joined with the ``orders`` and ``products`` null aggregates.
+    An item row whose FK found no parent key (null FKs included) is an
+    orphan.  Only when an orphan count is above zero does the
+    :func:`orphan_keys` ``limit(orphan_sample)`` query run per failing
+    check to fetch the reported samples.
     """
     res = ValidationResult(ok=True)
 
@@ -104,21 +109,58 @@ def validate_batch(
         # columns that don't exist
         return res
 
+    # null counts: one aggregate per table, slots n<i> in reason order
+    slots: list[tuple[str, str]] = []
+    null_aggs: dict[str, list] = {name: [] for name in frames}
     for name, df in frames.items():
-        for col, n in null_counts(df, required.get(name, [])).items():
-            res.null_counts[f"{name}.{col}"] = n
-            if n > 0:
-                res.ok = False
-                res.reasons.append(f"{name}.{col}: {n} null values in critical field")
+        for c in dict.fromkeys(required.get(name, [])):
+            if c in df.columns:
+                null_aggs[name].append(
+                    F.sum(F.col(c).isNull().cast("long")).alias(f"n{len(slots)}")
+                )
+                slots.append((name, c))
 
+    # orphan counts: item rows whose FK matched no distinct parent key
     checks = {
-        "order_items->orders": orphan_keys(order_items, orders, "order_id", "order_id"),
-        "order_items->products": orphan_keys(
-            order_items, products, "product_id", "id", broadcast_parent=True
-        ),
+        "order_items->orders": (orders, "order_id", "order_id", False),
+        "order_items->products": (products, "product_id", "id", True),
     }
-    for check, df in checks.items():
-        sample = [r[0] for r in df.limit(orphan_sample).collect()]
+    items, orphan_aggs = order_items, []
+    for i, (parent, child_key, parent_key, bcast) in enumerate(checks.values()):
+        keys = parent.select(F.col(parent_key).alias(f"__ri{i}")).distinct()
+        items = items.join(
+            F.broadcast(keys) if bcast else keys,
+            F.col(child_key) == F.col(f"__ri{i}"),
+            "left",
+        )
+        orphan_aggs.append(
+            F.sum(F.col(f"__ri{i}").isNull().cast("long")).alias(f"o{i}")
+        )
+
+    combined = items.agg(*null_aggs["order_items"], *orphan_aggs)
+    for name in ("orders", "products"):
+        if null_aggs[name]:
+            combined = combined.crossJoin(frames[name].agg(*null_aggs[name]))
+    row = combined.collect()[0]
+
+    for i, (name, col) in enumerate(slots):
+        n = int(row[f"n{i}"] or 0)
+        res.null_counts[f"{name}.{col}"] = n
+        if n > 0:
+            res.ok = False
+            res.reasons.append(f"{name}.{col}: {n} null values in critical field")
+
+    for i, (check, (parent, child_key, parent_key, bcast)) in enumerate(checks.items()):
+        if not row[f"o{i}"]:
+            continue
+        logger.debug(
+            "validate_batch: %d orphan rows in %s; sampling up to %d keys",
+            row[f"o{i}"], check, orphan_sample,
+        )
+        orphans = orphan_keys(
+            order_items, parent, child_key, parent_key, broadcast_parent=bcast
+        )
+        sample = [r[0] for r in orphans.limit(orphan_sample).collect()]
         if sample:
             res.ok = False
             res.orphans[check] = sample

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import logging
 import os
 import tempfile
 from collections.abc import Iterable
@@ -35,6 +36,8 @@ from pyspark.sql import functions as F
 
 from ..operators import kpis
 from ..operators.validation import ValidationResult, validate_batch
+
+logger = logging.getLogger(__name__)
 
 
 class BatchLedger:
@@ -389,6 +392,17 @@ def merge_upsert(
     read prunes to those partitions; dynamic partition overwrite swaps
     exactly them. Cost is O(affected partitions), never O(table).
 
+    Partition-replace path (``key_cols == [partition_col]``, e.g. the
+    KPI stream sink's ``["date_key"]``): every target row in a touched
+    partition matches an update, so the anti-join keeps none of them
+    and the merge result IS ``updates``.  The target is then never
+    read and nothing is staged — ``updates`` is written straight to
+    the table under per-write dynamic overwrite, replacing exactly its
+    partitions (two jobs: the partition list and the write).  Partition
+    values land as given: ISO ``YYYY-MM-DD`` strings produce the same
+    ``date_key=`` directories the anti-join path writes from the
+    DATE-inferred target type.
+
     Without ``partition_col`` the whole table rewrites through staging —
     correct, but O(table); partition your tables.
 
@@ -446,6 +460,9 @@ def merge_upsert(
             w = w.partitionBy(partition_col)
         w.parquet(target_path)
         _finalize_commit(claim)
+        logger.debug(
+            "merge_upsert %s: create path (v%d)", target_path, read_version + 1
+        )
         return
 
     read_version = _commit_version(target_path)
@@ -453,6 +470,32 @@ def merge_upsert(
     # writer, the table is mid-swap — reject before reading (a merge
     # built on this snapshot could promote without that writer's rows)
     _check_predecessor(target_path, read_version)
+
+    if partition_col and list(key_cols) == [partition_col]:
+        # partition-replace path: merged == updates (see docstring), so
+        # skip the target read, the anti-join and the staging detour
+        parts = [
+            r["p"]
+            for r in updates.select(F.col(partition_col).alias("p"))
+            .distinct()
+            .collect()
+        ]
+        if _pre_claim_hook is not None:
+            _pre_claim_hook()  # test seam: interleave a competing writer
+        claim = _claim_commit(
+            target_path,
+            read_version + 1,
+            writer,
+            {"partitions": [str(p) for p in parts]},
+        )
+        write_partitioned(updates, target_path, partition_col)
+        _finalize_commit(claim)
+        logger.debug(
+            "merge_upsert %s: partition-replace path (v%d, %d partitions)",
+            target_path, read_version + 1, len(parts),
+        )
+        return
+
     target = spark.read.parquet(target_path)
     if partition_col:
         # partition-directory type inference may widen the partition col
@@ -497,11 +540,7 @@ def merge_upsert(
             {"partitions": [str(p) for p in parts] if partition_col else []},
         )
         if partition_col:
-            # per-write dynamic overwrite: with the 'static' default this
-            # would truncate the table to the batch's partitions
-            merged_back.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy(partition_col).parquet(target_path)
+            write_partitioned(merged_back, target_path, partition_col)
         else:
             final = target_path.rstrip("/") + "__merge_final"
             merged_back.write.mode("overwrite").parquet(final)
@@ -522,6 +561,9 @@ def merge_upsert(
         _finalize_commit(claim)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+    logger.debug(
+        "merge_upsert %s: anti-join path (v%d)", target_path, read_version + 1
+    )
 
 
 def process_batch(

@@ -186,7 +186,7 @@ def daily_kpi_commit_stream(
     partition, the sink re-reads and retries (bounded by
     ``max_retries``), and both writers' rows land with no partial mix
     ever observable.  Two concurrent streams should pass distinct
-    ``writer`` names (staging isolation is per (version, writer)).
+    ``writer`` names (the write-audit records the writer per version).
 
     Replay safety: the running totals are state-store-backed (the
     streaming checkpoint replays the same emissions), and
@@ -204,7 +204,10 @@ def daily_kpi_commit_stream(
 
     Scale: per trigger the sink moves one row per TOUCHED day and
     rewrites only those days' partitions — O(affected days), never
-    O(history); the state store carries O(days × users/day).
+    O(history); the state store carries O(days × users/day).  The key
+    IS the partition column, so ``merge_upsert`` takes its direct
+    partition-replace path (no target read, no staging copy), and the
+    stateful plan executes once per trigger.
     """
     from ..plans.incremental import ConcurrentWriteError, merge_upsert
     from .stateful import daily_kpi_running
@@ -212,12 +215,16 @@ def daily_kpi_commit_stream(
     updated = daily_kpi_running(rows_stream)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         rows = batch_df.persist()
         try:
-            rows.count()  # materialize once; merge_upsert reads it twice
+            # the ONE execution of the stateful plan this trigger: the
+            # count fills the cache, and both the empty check and every
+            # merge_upsert read (partition list, write, retries) are
+            # served from it — an isEmpty() on the unpersisted batch
+            # would re-run the state load + commit a second time
+            if rows.count() == 0:
+                return
             for attempt in range(max_retries + 1):
                 try:
                     merge_upsert(

@@ -229,6 +229,132 @@ def test_merge_upsert_unpartitioned_fallback(spark, tmp_path):
     assert got == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def _partition_mtimes(path, part):
+    import os
+
+    d = os.path.join(path, part)
+    return {
+        f: os.path.getmtime(os.path.join(d, f))
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    }
+
+
+def test_merge_upsert_partition_replace(spark, tmp_path, monkeypatch):
+    """key_cols == [partition_col] (the KPI stream sink's call): the
+    merge result IS the updates, so merge_upsert writes them straight
+    over their partitions — the target is never read, nothing is
+    staged — with the full commit protocol and the same rows and
+    ``date_key=`` directories the anti-join path produced.  Null keys
+    replace the default partition; duplicate keys all land."""
+    import glob
+    import os
+
+    from ecs_ecommerce_data_pipeline_spark.plans import incremental as inc
+
+    schema = "date_key string, total long"
+    path = str(tmp_path / "kpis")
+    base = spark.createDataFrame(
+        [("2024-01-01", 10), ("2024-01-02", 20), ("2024-01-03", 30), (None, 70)],
+        schema,
+    )
+    # creation path: one committed create, ISO strings as partition dirs
+    inc.merge_upsert(
+        spark, path, base, ["date_key"], partition_col="date_key", writer="init"
+    )
+    parts = sorted(d for d in os.listdir(path) if d.startswith("date_key="))
+    assert parts == [
+        "date_key=2024-01-01",
+        "date_key=2024-01-02",
+        "date_key=2024-01-03",
+        "date_key=__HIVE_DEFAULT_PARTITION__",
+    ]
+    # the existing partitions read back as DATE — the type the old path
+    # cast the updates to before writing
+    assert spark.read.parquet(path).schema["date_key"].dataType.typeName() == "date"
+    untouched = {p: _partition_mtimes(path, p) for p in parts[1:3]}
+
+    reads, writes, staged = [], [], []
+    reader_cls = type(spark.read)
+    writer_cls = type(base.write)
+    orig_read, orig_write = reader_cls.parquet, writer_cls.parquet
+    orig_claim, orig_finalize = inc._claim_commit, inc._finalize_commit
+
+    def spy_read(self, *paths, **kw):
+        reads.extend(paths)
+        return orig_read(self, *paths, **kw)
+
+    def spy_write(self, p, *a, **kw):
+        writes.append(p)
+        return orig_write(self, p, *a, **kw)
+
+    def spy_claim(*a, **kw):
+        staged.extend(glob.glob(path + "__merge_staging_*"))
+        return orig_claim(*a, **kw)
+
+    def spy_finalize(claim_path):
+        staged.extend(glob.glob(path + "__merge_staging_*"))
+        orig_finalize(claim_path)
+
+    monkeypatch.setattr(reader_cls, "parquet", spy_read)
+    monkeypatch.setattr(writer_cls, "parquet", spy_write)
+    monkeypatch.setattr(inc, "_claim_commit", spy_claim)
+    monkeypatch.setattr(inc, "_finalize_commit", spy_finalize)
+
+    updates = spark.createDataFrame(
+        [("2024-01-01", 11), ("2024-01-01", 12), (None, 77), ("2024-01-04", 40)],
+        schema,
+    )
+    inc.merge_upsert(
+        spark, path, updates, ["date_key"], partition_col="date_key", writer="w1"
+    )
+    monkeypatch.undo()
+
+    assert reads == [], "partition replace must not read the target"
+    assert writes == [path]
+    assert staged == [] and not glob.glob(path + "__merge_staging_*")
+
+    def by_key(t):
+        return (str(t[0]), t[1])
+
+    got = sorted(
+        (
+            (None if r["date_key"] is None else str(r["date_key"]), r["total"])
+            for r in spark.read.parquet(path).collect()
+        ),
+        key=by_key,
+    )
+    assert got == sorted(
+        [
+            ("2024-01-01", 11),  # partition replaced by both duplicates
+            ("2024-01-01", 12),
+            ("2024-01-02", 20),  # untouched
+            ("2024-01-03", 30),  # untouched
+            ("2024-01-04", 40),  # new partition
+            (None, 77),  # null key replaces the default partition
+        ],
+        key=by_key,
+    )
+    assert sorted(d for d in os.listdir(path) if d.startswith("date_key=")) == [
+        "date_key=2024-01-01",
+        "date_key=2024-01-02",
+        "date_key=2024-01-03",
+        "date_key=2024-01-04",
+        "date_key=__HIVE_DEFAULT_PARTITION__",
+    ]
+    for p, before in untouched.items():
+        assert _partition_mtimes(path, p) == before, f"{p} was rewritten"
+
+    audit = {
+        r["version"]: (r["state"], r["writer"], sorted(r["partitions"]))
+        for r in inc.read_commit_audit(spark, path).collect()
+    }
+    assert audit == {
+        1: ("committed", "init", []),
+        2: ("committed", "w1", ["2024-01-01", "2024-01-04", "None"]),
+    }
+
+
 @pytest.mark.slow
 def test_process_batch_failed_validation_hits_status_log(spark, tmp_path):
     """A batch with a critical-field violation must: not write outputs,
