@@ -195,10 +195,13 @@ def daily_kpi_commit_stream(
     stamping.  ``_pre_claim_hook`` is the deterministic race seam
     (first attempt only), as in the batch sink's tests.
 
-    Checkpoint compatibility: the per-day state is kept by
-    ``applyInPandasWithState``.  A checkpoint written while this sink
-    ran on the former ``transformWithState`` (TWS) transport cannot
-    be resumed — restart from a fresh ``checkpoint_dir``; the sink's
+    Checkpoint compatibility: the per-day state is kept by a native
+    streaming aggregation.  A checkpoint written while this sink's fold
+    ran on ``applyInPandasWithState`` or on the former
+    ``transformWithState`` (TWS) transport cannot be resumed (the
+    query fails when it starts, e.g. with
+    ``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``) —
+    restart from a fresh ``checkpoint_dir``; the sink's
     replace-by-``date_key`` merge then re-lands each day's rows as the
     new stream re-folds them.
 

@@ -1,4 +1,4 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``).
+"""Keyed-state streaming operators.
 
 The reference's only cross-batch state is its DynamoDB batch ledger
 (arrival flags + exactly-once trigger, ``Lambda/lambda_function.py:99-265``)
@@ -13,11 +13,27 @@ partition (state itself never moves). Keys with no new rows cost
 nothing. State size is O(distinct keys × state row width) — for the
 running-totals operator below, two numbers per user.
 
-Every operator here has exactly one transport, ``applyInPandasWithState``
-on the session's configured state store (HDFS-backed by default).
+Two shapes of state, both on the session's configured state store
+(HDFS-backed by default):
+
+* ``daily_kpi_running`` is a plain aggregate (integer sums and an exact
+  distinct count per day), so it is a native streaming ``groupBy().agg()``
+  whose state the JVM folds — no Python worker runs for it;
+* every other operator here keeps state no built-in aggregation mode
+  expresses (a top-k list, a category map, open sessions with
+  timeouts) or, for ``user_running_totals``, a ``groupState`` layout
+  the offline state-store reader audits, and has exactly one Python
+  transport, ``applyInPandasWithState``.
+
 Checkpoints written by the former ``transformWithState`` (TWS)
 transport (RocksDB store, typed state variables) cannot be resumed by
-these operators: restart such a query from a fresh checkpoint location.
+these operators, and neither can a ``daily_kpi_running`` checkpoint
+written while it ran on ``applyInPandasWithState``: the stateful
+operator recorded in the checkpoint differs, so the query fails when
+it starts (``STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA``).
+Restart such a query from a fresh checkpoint location;
+``kpi_stream.daily_kpi_commit_stream``'s replace-by-``date_key`` merge
+then re-lands every day's rows.
 """
 
 from __future__ import annotations
@@ -299,6 +315,7 @@ def user_topk_events(events: DataFrame, k: int = 3) -> DataFrame:
 
 # --- running daily KPIs in the engine's keyed state store ------------------
 
+# the output contract of daily_kpi_running
 DAILY_KPI_SCHEMA = StructType(
     [
         StructField("date_key", StringType()),
@@ -309,40 +326,6 @@ DAILY_KPI_SCHEMA = StructType(
         StructField("unique_customers", LongType()),
     ]
 )
-
-_DAILY_KPI_STATE_SCHEMA = StructType(
-    [
-        StructField("total_orders", LongType()),
-        StructField("revenue_cents", LongType()),
-        StructField("items", LongType()),
-        StructField("returned", LongType()),
-        StructField("user_ids", ArrayType(LongType())),
-    ]
-)
-
-
-def _fold_daily_kpi(cur, pdfs):
-    """Per-key fold: (orders, revenue_cents, items, returned, user_id
-    set) ← one micro-batch's tagged rows.
-
-    Vectorized over each Arrow-delivered frame (round-11, closing the
-    round-10 verdict's residual note: the per-row Python loop was legal
-    but O(rows) interpreter work per fat batch — masked pandas sums are
-    the same exact integer arithmetic; cents arrive as int64, so
-    ``.sum()`` folds in numpy int64 and converts back losslessly)."""
-    orders, revenue, items, returned, users = cur
-    for pdf in pdfs:
-        is_order = pdf["kind"] == "order"
-        n_ord = int(is_order.sum())
-        orders += n_ord
-        items += int(len(pdf) - n_ord)
-        if n_ord:
-            od = pdf[is_order]
-            revenue += int(od["revenue_cents"].sum())
-            returned += int(od["returned"].sum())
-            uids = od["user_id"].dropna()
-            users.update(int(u) for u in uids)
-    return orders, revenue, items, returned, users
 
 
 def daily_kpi_running(rows: DataFrame) -> DataFrame:
@@ -357,48 +340,35 @@ def daily_kpi_running(rows: DataFrame) -> DataFrame:
     (kind='order': order_id, user_id, revenue_cents = the order's item
     revenue in exact cents, returned flag) plus one row per ITEM at the
     item's own created date (kind='item') — exactly the two scans
-    ``operators.kpis.daily_kpis`` aggregates.  Keyed by ``date_key``;
-    each trigger folds the batch's rows into per-day state
-    (counts/cents: four integers; exact distinct customers: the
-    user-id set — the ``distinct_member_state`` rationale, state
-    O(users/day)) and re-emits the day's current KPI row (update mode).
+    ``operators.kpis.daily_kpis`` aggregates.  Every row whose kind is
+    not 'order' (a null kind included) counts as an item; revenue,
+    returned orders and customers come from order rows only, skipping
+    nulls; an item-only day reads zeros, never nulls.
+
+    A plain streaming aggregation keyed by ``date_key`` in update mode:
+    the per-day state (four integer sums and the exact customer set
+    behind ``size(collect_set(user_id))``) lives in the JVM state store,
+    so a trigger starts no Python worker.  Output: ``DAILY_KPI_SCHEMA``
+    (pinned by ``tests/test_state_transport_guard.py``).
 
     Fold-equals-batch (pinned in ``tests/test_round10_tws_kpis.py``):
     after any micro-batch split of the same input, the last emission
     per day equals ``daily_kpis`` on the full input — counts and cents
-    are exact integers, so equality is bitwise.
+    are exact integers, so equality is bitwise."""
+    is_order = F.col("kind") == "order"
 
-    State per day: the four integers plus the user-id set as a sorted
-    array, one struct rewritten per touched day per trigger."""
+    def order_sum(col: str):
+        return F.coalesce(F.sum(F.when(is_order, F.col(col))), F.lit(0))
 
-    def update(key, pdfs, state):
-        cur = (0, 0, 0, 0, set())
-        if state.exists:
-            o, r, i, t, uids = state.get
-            cur = (int(o), int(r), int(i), int(t), {int(u) for u in uids})
-        orders, revenue, items, returned, users = _fold_daily_kpi(cur, pdfs)
-        state.update((orders, revenue, items, returned, sorted(users)))
-        yield pd.DataFrame(
-            {
-                "date_key": [str(key[0])],
-                "total_orders": [orders],
-                "total_revenue_cents": [revenue],
-                "total_items_sold": [items],
-                "returned_orders": [returned],
-                "unique_customers": [len(users)],
-            }
-        )
-
-    return (
-        rows.select("date_key", "kind", "user_id", "revenue_cents", "returned")
-        .groupBy("date_key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=DAILY_KPI_SCHEMA,
-            stateStructType=_DAILY_KPI_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return rows.groupBy(F.col("date_key").cast("string").alias("date_key")).agg(
+        F.sum(F.when(is_order, 1).otherwise(0)).alias("total_orders"),
+        order_sum("revenue_cents").cast("long").alias("total_revenue_cents"),
+        # a null kind fails the test too, so it lands in otherwise(1)
+        F.sum(F.when(is_order, 0).otherwise(1)).alias("total_items_sold"),
+        order_sum("returned").cast("long").alias("returned_orders"),
+        F.size(F.collect_set(F.when(is_order, F.col("user_id"))))
+        .cast("long")
+        .alias("unique_customers"),
     )
 
 

@@ -4,8 +4,9 @@
 ``kpi_state_stream`` folds partial-aggregate state into a parquet table
 by hand inside ``foreachBatch`` (ledger + ``_applied_batch`` stamps +
 dynamic-overwrite choreography).  ``stateful.daily_kpi_running`` moves
-that state INTO the engine's keyed state store
-(``applyInPandasWithState``).  Pinned here:
+that state INTO the engine's keyed state store as a native streaming
+aggregation (``groupBy("date_key").agg(...)`` in update mode, folded
+in the JVM).  Pinned here:
 
 * fold-equals-batch: streaming the ``daily_kpi_rows`` grain in
   arbitrary micro-batch splits ends, per day, at exactly

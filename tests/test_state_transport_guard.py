@@ -1,7 +1,9 @@
-"""The engine keeps one streaming-state transport
+"""The engine keeps one Python streaming-state transport
 (``applyInPandasWithState``): building a session leaves the process
 environment alone, and the package carries no protobuf runtime or
-second (transformWithState) code path."""
+second (transformWithState) code path.  The running daily KPIs need no
+Python transport at all: their plan is a native state-store aggregate
+with the ``DAILY_KPI_SCHEMA`` output."""
 
 from __future__ import annotations
 
@@ -40,3 +42,38 @@ def test_package_has_no_second_state_transport():
         if word in path.read_text(encoding="utf-8")
     ]
     assert hits == []
+
+
+def _daily_kpi_stream(spark, tmp_path):
+    from ecs_ecommerce_data_pipeline_spark.streaming.stateful import (
+        daily_kpi_running,
+    )
+
+    src = tmp_path / "kpi_rows"
+    src.mkdir()
+    stream = spark.readStream.schema(
+        "date_key string, kind string, user_id long, revenue_cents bigint, "
+        "returned long"
+    ).parquet(str(src))
+    return daily_kpi_running(stream)
+
+
+def test_daily_kpi_running_output_schema(spark, tmp_path):
+    from ecs_ecommerce_data_pipeline_spark.streaming.stateful import (
+        DAILY_KPI_SCHEMA,
+    )
+
+    got = _daily_kpi_stream(spark, tmp_path).schema
+    assert [(f.name, f.dataType) for f in got.fields] == [
+        (f.name, f.dataType) for f in DAILY_KPI_SCHEMA.fields
+    ]
+
+
+def test_daily_kpi_running_is_a_native_state_store_aggregate(spark, tmp_path):
+    df = _daily_kpi_stream(spark, tmp_path)
+    # the physical plan a started query would run (what explain() prints)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    assert "StateStoreSave" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan

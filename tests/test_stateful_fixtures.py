@@ -79,6 +79,29 @@ def test_daily_kpi_running_fixture(spark, tmp_path):
     assert got["2024-03-02"] == (0, 0, 1, 0, 0)
 
 
+def test_daily_kpi_running_edge_fixture(spark, tmp_path):
+    """Nulls and item-only days: a null ``kind`` counts as an item, null
+    revenue, returned flag and customer are skipped on order rows, and
+    an item-only day reads zeros, not nulls."""
+    rows = spark.createDataFrame(
+        [
+            ("2024-04-01", "order", 7, 1000, 1),
+            ("2024-04-01", "order", None, 200, 0),
+            ("2024-04-01", "order", 8, None, None),
+            ("2024-04-01", None, 9, 300, 1),
+            ("2024-04-01", "item", None, 0, 0),
+            ("2024-04-02", "item", None, 0, 0),
+            ("2024-04-02", "item", None, 0, 0),
+        ],
+        KPI_ROWS_SCHEMA,
+    )
+    got = _run_daily(spark, tmp_path, "kpi_edge_fixture", rows)
+    assert got == {
+        "2024-04-01": (3, 1200, 2, 1, 2),
+        "2024-04-02": (0, 0, 2, 0, 0),
+    }
+
+
 def test_user_topk_events_fixture(spark, tmp_path):
     from ecs_ecommerce_data_pipeline_spark.streaming import stateful as st
 
