@@ -47,7 +47,6 @@ def two_phase_cummax_excl(
     out_col: str,
     order_cols: list[str] | None = None,
     n_buckets: int | None = None,
-    cut: bool = True,
 ) -> DataFrame:
     """EXCLUSIVE running max of ``target_col`` in global ``value_col``
     order — each row gets max(target) over all STRICTLY EARLIER rows
@@ -88,11 +87,8 @@ def two_phase_cummax_excl(
     # ``df`` — without a lineage cut one physical plan executes the
     # caller's upstream pipeline three times.  A lazy localCheckpoint
     # materializes the binned rows once (first consumer computes, the
-    # rest read the persisted blocks).  ``cut=False`` opts out (ADVICE
-    # r11): a caller whose ``df`` is already lineage-cut and bounded
-    # skips the second materialization barrier.
-    if cut:
-        binned = binned.localCheckpoint(eager=False)
+    # rest read the persisted blocks).
+    binned = binned.localCheckpoint(eager=False)
     order = order_cols or [value_col if isinstance(value_col, str) else v]
     wloc = (
         Window.partitionBy(_PID)
@@ -125,7 +121,6 @@ def two_phase_cumsum(
     weights: dict[str, str | Column],
     order_cols: list[str] | None = None,
     n_buckets: int | None = None,
-    cut: bool = True,
 ) -> DataFrame:
     """Inclusive prefix sums of ``weights`` in global ``order_cols``
     order (default: by ``value_col``), computed two-phase.
@@ -171,12 +166,10 @@ def two_phase_cumsum(
         .withColumn(_PID, pid)
         .drop("_vmin", "_vmax")
     )
-    # same lineage cut (and the same cut=False opt-out) as
-    # two_phase_cummax_excl above: one materialization serves the
-    # window, the bucket totals and — through them — the offsets
-    # self-join
-    if cut:
-        binned = binned.localCheckpoint(eager=False)
+    # same lineage cut as two_phase_cummax_excl above: one
+    # materialization serves the window, the bucket totals and — through
+    # them — the offsets self-join
+    binned = binned.localCheckpoint(eager=False)
     order = order_cols or [value_col if isinstance(value_col, str) else v]
     wloc = (
         Window.partitionBy(_PID)

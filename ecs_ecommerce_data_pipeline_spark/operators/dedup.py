@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.single_task import fits_one_task
 from ..functions.textfn import tokens, word_shingles
 
 
@@ -564,20 +565,6 @@ def _small_star(E: DataFrame) -> DataFrame:
     return rewired.unionByName(parent).distinct()
 
 
-def _cc_single_task_edges() -> int:
-    """Edge-count ceiling below which connected components runs as one
-    union-find task (default 4 Mi edges ≈ 64 MB of id pairs; 0 disables
-    the fast path — the equivalence tests pin both paths)."""
-    import os
-
-    try:
-        return int(
-            os.environ.get("SPARK_GRAFT_CC_SINGLE_TASK_EDGES", 4 * 1024 * 1024)
-        )
-    except ValueError:
-        return 4 * 1024 * 1024
-
-
 def _cc_single_task(E: DataFrame) -> DataFrame:
     """Exact connected components of the (materialized) canonical edge
     list ``E(a, b)`` via union-find in ONE ``mapInPandas`` task.
@@ -680,10 +667,10 @@ def connected_components(
     pure scheduling overhead.  Connected components has a UNIQUE answer
     (component = min reachable node id — no floats, no order
     sensitivity), so when the canonical edge list fits one task
-    (``SPARK_GRAFT_CC_SINGLE_TASK_EDGES``, default 4 Mi edges) it is
-    computed by an exact union-find kernel in a single ``mapInPandas``
-    pass over the once-materialized edge list — provably identical
-    labels, 3 jobs total.  Beyond the threshold the distributed
+    (``functions.single_task.fits_one_task`` on 32 bytes per edge: 4 Mi
+    edges at the 128 MiB ceiling) it is computed by an exact union-find
+    kernel in a single ``mapInPandas`` pass over the once-materialized
+    edge list — provably identical labels, 3 jobs total.  Beyond the threshold the distributed
     star-contraction + fixpoint propagation below runs unchanged (it is
     the 100 TB shape; edge lists there dwarf any single task).
     """
@@ -693,7 +680,7 @@ def connected_components(
     ).filter(F.col("a") != F.col("b"))
     E = E.localCheckpoint(eager=False)
     n_edges = E.count()  # materializes the upstream candidate pipeline ONCE
-    if n_edges <= _cc_single_task_edges():
+    if fits_one_task(n_edges * 32, "connected_components"):
         return _cc_single_task(E)
     prev_edges = n_edges
     for _ in range(star_rounds):

@@ -37,22 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.single_task import fits_one_task
+
 _DAMPING = 0.85
 _SCALE = 1099511627776.0  # 2^40 — exact binary scaling factor
-
-
-def _pr_single_task_edges() -> int:
-    """Edge-count ceiling below which PageRank runs as one exact kernel
-    task (default 4 Mi edges; 0 disables the fast path — the round-11
-    tests pin both paths)."""
-    import os
-
-    try:
-        return int(
-            os.environ.get("SPARK_GRAFT_PR_SINGLE_TASK_EDGES", 4 * 1024 * 1024)
-        )
-    except ValueError:
-        return 4 * 1024 * 1024
 
 
 def _pr_single_task(
@@ -138,7 +126,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 2,
     damping: float = _DAMPING,
-    checkpoint: bool = True,
     distinct_edges: bool = True,
 ) -> DataFrame:
     """PageRank over directed ``edges(src, dst)`` (STRING node ids —
@@ -161,23 +148,22 @@ def pagerank(
     edges = edges.select("src", "dst")
     if distinct_edges:
         edges = edges.distinct()
-    if checkpoint:
-        # the edge list feeds the degree agg and the degree join —
-        # without a reuse point the upstream derivation (often a join
-        # itself) re-executes per consumer
-        edges = edges.persist()
-        # Round-11 (guide §1.2; the connected-components pattern): the
-        # distributed loop costs ~8 jobs / ~6 exchanges of setup plus 2
-        # per iteration — pure scheduling floor when the graph fits one
-        # task.  The 2^40 integer-scaled sums make the result
-        # order-free, so the single-task kernel is bit-identical; the
-        # gating count doubles as the materializing action the persist
-        # wanted anyway, and beyond the gate the distributed form below
-        # runs unchanged (the 100 TB shape) on the already-warm cache.
-        if edges.count() <= _pr_single_task_edges():
-            result = _pr_single_task(edges, iters, damping)
-            edges.unpersist()
-            return result
+    # the edge list feeds the degree agg and the degree join — without
+    # a reuse point the upstream derivation (often a join itself)
+    # re-executes per consumer
+    edges = edges.persist()
+    # Round-11 (the connected-components pattern): the
+    # distributed loop costs ~8 jobs / ~6 exchanges of setup plus 2 per
+    # iteration — pure scheduling floor when the graph fits one task.
+    # The 2^40 integer-scaled sums make the result order-free, so the
+    # single-task kernel is bit-identical; the gating count doubles as
+    # the materializing action the persist wanted anyway, and beyond the
+    # gate the distributed form below runs unchanged (the 100 TB shape)
+    # on the already-warm cache.
+    if fits_one_task(edges.count() * 32, "pagerank"):
+        result = _pr_single_task(edges, iters, damping)
+        edges.unpersist()
+        return result
     # Pre-join the out-degree onto the edge list ONCE and pin the
     # result: each iteration then needs a single join (ranks) instead
     # of two. persist() — NOT localCheckpoint — is the reuse primitive
@@ -190,20 +176,17 @@ def pagerank(
     # re-shuffled the whole edge list EVERY iteration.
     wedges = edges.join(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
-    )
-    if checkpoint:
-        wedges = wedges.persist()
+    ).persist()
     nodes = (
         wedges.select(F.col("src").alias("node"))
         .unionByName(wedges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if checkpoint:
-        # referenced in the initial ranks AND every iteration's left
-        # join; cached partitioning (hashpartitioning(node)) lines up
-        # with the contribution agg's output, so the per-iteration
-        # rank-update join shuffles nothing
-        nodes = nodes.persist()
+    # referenced in the initial ranks AND every iteration's left join;
+    # cached partitioning (hashpartitioning(node)) lines up with the
+    # contribution agg's output, so the per-iteration rank-update join
+    # shuffles nothing
+    nodes = nodes.persist()
     # N and the base term ride along as columns of a 1-row broadcast —
     # never collected to the driver
     n_nodes = nodes.agg(F.count(F.lit(1)).cast("double").alias("n_nodes"))
@@ -241,14 +224,13 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-    if checkpoint:
-        # Materialize the final ranks (truncating the iters-deep lineage
-        # that referenced the pinned relations), then release the cached
-        # blocks — otherwise every pagerank() call leaks executor storage
-        # for the session lifetime and callers must clearCache() around it.
-        ranks = ranks.localCheckpoint(eager=True)
-        for pinned in (nodes, wedges, edges):
-            pinned.unpersist()
+    # Materialize the final ranks (truncating the iters-deep lineage
+    # that referenced the pinned relations), then release the cached
+    # blocks — otherwise every pagerank() call leaks executor storage
+    # for the session lifetime and callers must clearCache() around it.
+    ranks = ranks.localCheckpoint(eager=True)
+    for pinned in (nodes, wedges, edges):
+        pinned.unpersist()
     return ranks
 
 
@@ -257,7 +239,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     iters: int = 2,
     damping: float = _DAMPING,
-    checkpoint: bool = True,
     distinct_edges: bool = True,
 ) -> DataFrame:
     """Personalized PageRank: the restart mass returns to the SEED set
@@ -281,25 +262,21 @@ def personalized_pagerank(
     edges = edges.select("src", "dst")
     if distinct_edges:
         edges = edges.distinct()
-    if checkpoint:
-        edges = edges.persist()
-        # same single-task gate as :func:`pagerank`; the seed set is
-        # bounded (it IS the restart distribution's support — collected
-        # once, one small job) and n_seeds counts ALL distinct seeds,
-        # matching the distributed base join's out-of-graph drop
-        if edges.count() <= _pr_single_task_edges():
-            seed_vals = [r["node"] for r in seeds.collect()]
-            result = _pr_single_task(
-                edges, iters, damping, seeds=seed_vals,
-                n_seeds=len(seed_vals),
-            )
-            edges.unpersist()
-            return result
+    edges = edges.persist()
+    # same single-task gate as :func:`pagerank`; the seed set is bounded
+    # (it IS the restart distribution's support — collected once, one
+    # small job) and n_seeds counts ALL distinct seeds, matching the
+    # distributed base join's out-of-graph drop
+    if fits_one_task(edges.count() * 32, "personalized_pagerank"):
+        seed_vals = [r["node"] for r in seeds.collect()]
+        result = _pr_single_task(
+            edges, iters, damping, seeds=seed_vals, n_seeds=len(seed_vals)
+        )
+        edges.unpersist()
+        return result
     wedges = edges.join(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
-    )
-    if checkpoint:
-        wedges = wedges.persist()
+    ).persist()
     nodes = (
         wedges.select(F.col("src").alias("node"))
         .unionByName(wedges.select(F.col("dst").alias("node")))
@@ -319,9 +296,7 @@ def personalized_pagerank(
                 F.col("_is_seed") == 1, F.lit(1.0) / F.col("n_seeds")
             ).otherwise(F.lit(0.0)).alias("r"),
         )
-    )
-    if checkpoint:
-        base = base.persist()
+    ).persist()
     ranks = base.select("node", F.col("r").alias("rank"))
     for _ in range(iters):
         contribs = (
@@ -352,8 +327,7 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-    if checkpoint:
-        ranks = ranks.localCheckpoint(eager=True)
-        for pinned in (base, wedges, edges):
-            pinned.unpersist()
+    ranks = ranks.localCheckpoint(eager=True)
+    for pinned in (base, wedges, edges):
+        pinned.unpersist()
     return ranks

@@ -71,7 +71,6 @@ def bigram_lm_scores(
     doc: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document bigram-LM quality score over the corpus itself.
 
@@ -90,15 +89,12 @@ def bigram_lm_scores(
     db = bigram_multiplicities(doc, text_col, id_col).select(
         id_col, md5_bigint(F.col("bigram")).alias("bg_h"), "m"
     )
-    if materialize:
-        # db feeds BOTH the frequency aggregation and the score join —
-        # without a lineage cut Catalyst evaluates the tokenize+explode
-        # subtree twice. Values are unchanged (same oracle). Round 11:
-        # the cut is now the DEFAULT (guide §2.4) — the 24-byte
-        # (doc, hash, m) rows are cheaper to materialize once than the
-        # tokenize+md5 is to run twice at any scale; pass False only to
-        # inspect the fully lazy plan.
-        db = db.localCheckpoint(eager=False)
+    # db feeds BOTH the frequency aggregation and the score join —
+    # without a lineage cut Catalyst evaluates the tokenize+explode
+    # subtree twice. Values are unchanged (same oracle). The 24-byte
+    # (doc, hash, m) rows are cheaper to materialize once than the
+    # tokenize+md5 is to run twice at any scale.
+    db = db.localCheckpoint(eager=False)
     freq = db.groupBy("bg_h").agg(F.sum("m").cast("bigint").alias("c"))
     bits = F.length(F.bin(F.col("c"))).cast("bigint")
     scored = db.join(freq, "bg_h").groupBy(id_col).agg(

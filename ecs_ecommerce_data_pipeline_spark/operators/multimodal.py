@@ -563,7 +563,6 @@ def image_neardup_pairs(
     bands: DataFrame,
     max_hamming: int = 10,
     band_bits: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """(doc_a, doc_b, hamming): image pairs whose dHash Hamming distance
     is ≤ ``max_hamming``, candidates blocked on shared hash bands —
@@ -592,8 +591,7 @@ def image_neardup_pairs(
     decode + fingerprint kernel) once per consumer, so it is
     persist-pinned for the duration, the pair-sized result is
     materialized, and the pin released before returning (the
-    ``prefix_filter_join`` discipline).  ``materialize=False`` skips
-    that for plan inspection — the caller releases the pin.
+    ``prefix_filter_join`` discipline).
     """
     bands = bands.persist()
     blocks = fuse_bands(bands, band_bits)
@@ -636,9 +634,6 @@ def image_neardup_pairs(
             hamming64("lo_a", "lo_b", "hi_a", "hi_b").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-    )
-    if not materialize:
-        return result
-    result = result.localCheckpoint()
+    ).localCheckpoint()
     bands.unpersist()
     return result

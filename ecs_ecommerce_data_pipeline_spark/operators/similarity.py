@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.single_task import fits_one_task
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two ARRAY<DOUBLE> columns.
@@ -2347,24 +2349,6 @@ _KPAR_COST_SCALE = 1 << 20  # cost quantum: FLOOR((1 − maxcos)·2^20)
 _KPAR_U_SCALE = 1 << 60     # md5-uniform resolution (15 hex chars)
 
 
-def _kpar_single_task_doubles() -> int:
-    """State-size ceiling (float64 elements) below which the k-means||
-    oversample chain runs inside one Arrow task — the
-    ``_fps_single_task_doubles`` dial for the kpar chain; override with
-    ``SPARK_GRAFT_KPAR_SINGLE_TASK_DOUBLES`` (0 disables the fast path,
-    which the equivalence tests use to pin both paths together)."""
-    import os
-
-    try:
-        return int(
-            os.environ.get(
-                "SPARK_GRAFT_KPAR_SINGLE_TASK_DOUBLES", 16 * 1024 * 1024
-            )
-        )
-    except ValueError:
-        return 16 * 1024 * 1024
-
-
 def _kpar_chain_single_task(
     base: DataFrame, l: int, rounds: int, seed_tag: str
 ) -> tuple[DataFrame, list[dict]]:
@@ -2623,14 +2607,16 @@ def kmeans_parallel_oversample(
         return math.sqrt(sd)
 
     dims = len(first[0]["vec"])
-    # Gate on n·max(dims, 1 + l·rounds) (ADVICE r11): dims bounds the
-    # kernel's O(n·dims) matrix, and 1 + l·rounds — the candidate-count
-    # ceiling — proxies the per-round interpreter work (one md5 draw per
-    # costly row per round), so a low-dim many-row corpus cannot sneak
-    # millions of pure-Python hash calls into one task.  The distributed
-    # loop above the gate is the 100 TB shape and handles it unchanged.
-    if int(head["n"]) * max(dims, 1 + l * rounds, 1) <= (
-        _kpar_single_task_doubles()
+    # Gate on 8·n·max(dims, 1 + l·rounds) bytes (ADVICE r11): dims
+    # bounds the kernel's O(n·dims) matrix, and 1 + l·rounds — the
+    # candidate-count ceiling — proxies the per-round interpreter work
+    # (one md5 draw per costly row per round), so a low-dim many-row
+    # corpus cannot sneak millions of pure-Python hash calls into one
+    # task.  The distributed loop above the gate is the 100 TB shape
+    # and handles it unchanged.
+    if fits_one_task(
+        8 * int(head["n"]) * max(dims, 1 + l * rounds, 1),
+        "kmeans_parallel_oversample",
     ):
         return _kpar_chain_single_task(
             embeddings.select(
@@ -2784,23 +2770,6 @@ def kmeans_parallel_oversample(
     return out, stats
 
 
-def _fps_single_task_doubles() -> int:
-    """State-size ceiling (in float64 elements) below which the exact
-    FPS pick chain runs inside one Arrow task instead of k distributed
-    rounds.  Default 16 Mi doubles = 128 MiB of vector state — the
-    guide-§6 task-sizing band; override with
-    ``SPARK_GRAFT_FPS_SINGLE_TASK_DOUBLES`` (0 disables the fast path,
-    which the equivalence tests use to pin both paths to one oracle)."""
-    import os
-
-    try:
-        return int(
-            os.environ.get("SPARK_GRAFT_FPS_SINGLE_TASK_DOUBLES", 16 * 1024 * 1024)
-        )
-    except ValueError:
-        return 16 * 1024 * 1024
-
-
 def _fps_chain_single_task(base: DataFrame, k: int) -> list[tuple]:
     """Run the full farthest-point pick chain in ONE ``mapInPandas``
     task over ``base(vid BIGINT, vec ARRAY<DOUBLE>)`` and return the
@@ -2922,12 +2891,12 @@ def farthest_point_seeds(
     the bench scales the ~0.1 s/job floor (scheduling + planning)
     dominated the microseconds of per-round compute (measured: 64 seeds
     = 128 jobs = 7.3 s for 2000×16 doubles of state).  When the whole
-    candidate state fits ONE task (``_FPS_SINGLE_TASK_DOUBLES``,
-    env-overridable), the identical pick chain now runs inside a single
-    ``mapInPandas`` kernel: ``np.cumsum`` sequential folds (the
-    ``brute_force_topk_arrow`` bit-exactness contract), ``np.maximum``
-    for the running max, lexsort-(mx, vid) argmins — every float op in
-    the same IEEE order, so the picks and centroids are bit-identical
+    n·dims float64 candidate state fits ONE task
+    (``functions.single_task.fits_one_task``), the identical pick chain
+    now runs inside a single ``mapInPandas`` kernel: ``np.cumsum``
+    sequential folds (the ``brute_force_topk_arrow`` bit-exactness
+    contract), ``np.maximum`` for the running max, lexsort-(mx, vid)
+    argmins — every float op in the same IEEE order, so the picks and centroids are bit-identical
     and the same DuckDB oracle verifies both paths.  Beyond the
     threshold the distributed running-max form below engages unchanged
     (k global barriers are fundamental to exact FPS; at 100 TB the scan
@@ -2950,7 +2919,9 @@ def farthest_point_seeds(
         return spark.createDataFrame([], out_schema)
     first = [head["f"]]
     dims = len(first[0]["vec"])
-    if k > 1 and int(head["n"]) * max(dims, 1) <= _fps_single_task_doubles():
+    if k > 1 and fits_one_task(
+        8 * int(head["n"]) * max(dims, 1), "farthest_point_seeds"
+    ):
         rows = _fps_chain_single_task(
             embeddings.select(
                 F.col(id_col).cast("bigint").alias("vid"),
@@ -3031,7 +3002,7 @@ def kmeans_refine(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     init_centroids: DataFrame | None = None,
-    round_cuts: bool | None = None,
+    round_cuts: bool = True,
 ) -> DataFrame:
     """Lloyd's k-means for ``iters`` FIXED iterations (no convergence
     probe → no per-iteration driver boundary at all, and a deterministic
@@ -3044,24 +3015,17 @@ def kmeans_refine(
     Per iteration: one broadcast-scored scan + one explode-aggregate —
     both map-side-combinable shuffles of k·dims rows, O(n·k·dims) work,
     no state on the driver (centroids never leave the cluster)."""
-    import os as _os
-
     # round 11 (guide §2.4/§5): without a cut, every later assign's
     # broadcast re-executes the whole nested assign→recompute chain
     # below it (depth² corpus passes by the last iteration).  Per-round
     # lazy checkpoints of the BOUNDED k×dims centroid frames make the
-    # chain below each broadcast run exactly once.  ``round_cuts``
-    # overrides per call (a SHALLOW chain whose consumer also runs
-    # other full-corpus channels can lose more to the materialization
-    # barrier than the cut saves — measured on sim_ivf_trained_recall);
-    # default comes from SPARK_GRAFT_KMEANS_ROUND_CUTS (on).
-    if round_cuts is None:
-        cuts = _os.environ.get("SPARK_GRAFT_KMEANS_ROUND_CUTS", "1") != "0"
-    else:
-        cuts = bool(round_cuts)
+    # chain below each broadcast run exactly once.  ``round_cuts=False``
+    # skips them: a SHALLOW chain whose consumer also runs other
+    # full-corpus channels can lose more to the materialization barrier
+    # than the cut saves (measured on sim_ivf_trained_recall).
 
     def _cut(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if cuts else df
+        return df.localCheckpoint(eager=False) if round_cuts else df
 
     if init_centroids is not None:
         centroids = init_centroids.select("cluster_id", "centroid")

@@ -598,13 +598,12 @@ def q_equidepth_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     cum = (
-        # ADVICE r11 suggested cut=False here (vals is already
-        # lineage-cut one line upstream) — MEASURED WORSE (r12
-        # profile_split: exec 1.99 s/13 jobs -> 2.77 s/15 jobs): the
-        # binned checkpoint also dedupes the broadcast-stats subtree and
-        # the bucket projection feeding two exchanges.  Keeping the
-        # default cut; the opt-out parameter exists for callers whose
-        # binned input is genuinely trivial.
+        # two_phase_cumsum cuts its binned rows even though vals is
+        # already lineage-cut one line upstream: skipping that cut
+        # MEASURED WORSE (r12 profile_split: exec 1.99 s/13 jobs ->
+        # 2.77 s/15 jobs) — the binned checkpoint also dedupes the
+        # broadcast-stats subtree and the bucket projection feeding two
+        # exchanges.
         two_phase_cumsum(vals, "v", {"hi": "c"})
         .withColumn("lo", F.col("hi") - F.col("c"))
         .select("v", "c", "lo", "hi")

@@ -148,7 +148,7 @@ def q_dataset_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canon feeds the LM subtree AND the score join: one lineage cut
     # stops the scan→gate→dedup chain evaluating twice
     canon = canon.localCheckpoint(eager=False)
-    lm = bigram_lm_scores(canon.select("doc_id", "text"), materialize=True)
+    lm = bigram_lm_scores(canon.select("doc_id", "text"))
     kept = (
         canon.join(lm.select("doc_id", "n_bigrams", "sum_bits", "rare_ratio"), "doc_id")
         .filter(F.col("rare_ratio") <= _RARE_MAX)

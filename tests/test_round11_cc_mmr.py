@@ -1,67 +1,11 @@
-"""Round-11 optimization pins: (1) the single-task union-find fast path
-of ``connected_components`` must be identical to the distributed
-star-contraction + min-label propagation (component labels are a unique
-connectivity fact), with the dispatch env-gated so BOTH paths stay
-exercised; (2) the grouped-Arrow MMR kernel must reproduce the greedy
-MMR reference (picks, order, scores).
+"""Round-11 optimization pin: the grouped-Arrow MMR kernel must
+reproduce the greedy MMR reference (picks, order, scores), and its
+injected frames are checked at build time and in the kernel.  The
+connected-components fast==distributed cases live in
+``test_single_task_gate.py``.
 """
 
 from __future__ import annotations
-
-from ecs_ecommerce_data_pipeline_spark.operators.dedup import connected_components
-
-
-def _cc(spark, pairs, schema):
-    edges = spark.createDataFrame(pairs, schema)
-    return {
-        (r["node"], r["component"]) for r in connected_components(edges).collect()
-    }
-
-
-def _rand_edges(n_nodes=120, n_edges=200, seed=7):
-    # deterministic LCG so the graph is stable across runs
-    x = seed
-    out = []
-    for _ in range(n_edges):
-        x = (1103515245 * x + 12345) % (1 << 31)
-        a = x % n_nodes
-        x = (1103515245 * x + 12345) % (1 << 31)
-        b = x % n_nodes
-        out.append((a, b))
-    return out
-
-
-def test_fast_path_matches_distributed(spark, monkeypatch):
-    pairs = _rand_edges()
-    fast = _cc(spark, pairs, "doc_a bigint, doc_b bigint")
-    monkeypatch.setenv("SPARK_GRAFT_CC_SINGLE_TASK_EDGES", "0")
-    slow = _cc(spark, pairs, "doc_a bigint, doc_b bigint")
-    assert fast == slow
-    # sanity: min-label contract holds
-    comp_of = dict(fast)
-    assert all(c <= n for n, c in fast)
-    assert all(comp_of[c] == c for _, c in fast)
-
-
-def test_fast_path_string_ids(spark, monkeypatch):
-    pairs = [("d1", "d2"), ("d2", "d3"), ("x9", "x8"), ("m5", "m5")]
-    fast = _cc(spark, pairs, "doc_a string, doc_b string")
-    monkeypatch.setenv("SPARK_GRAFT_CC_SINGLE_TASK_EDGES", "0")
-    slow = _cc(spark, pairs, "doc_a string, doc_b string")
-    assert fast == slow
-    assert ("d3", "d1") in fast and ("x9", "x8") in fast
-
-
-def test_distributed_chain_still_reaches_fixpoint(spark, monkeypatch):
-    # path graph of diameter 9 forces several propagation rounds on the
-    # distributed path (the small-graph tests now take the fast path)
-    monkeypatch.setenv("SPARK_GRAFT_CC_SINGLE_TASK_EDGES", "0")
-    got = _cc(spark, [(i, i + 1) for i in range(1, 10)], "doc_a bigint, doc_b bigint")
-    assert got == {(i, 1) for i in range(1, 11)}
-
-
-def test_empty_edges(spark):
-    assert _cc(spark, [], "doc_a bigint, doc_b bigint") == set()
 
 
 def test_mmr_kernel_matches_greedy_reference(spark):
