@@ -1,16 +1,26 @@
-"""Round-11 optimization: the single-task Arrow fast path of
-``farthest_point_seeds`` must be bit-identical to the distributed
-running-max chain (same picks, same centroids, same order), and the
-dispatch must be size-gated and env-overridable.
+"""The single-task Arrow kernel of ``farthest_point_seeds`` must be
+bit-identical to the distributed running-max chain (same picks, same
+centroids, same order), and the dispatch between them is the one byte
+ceiling of ``functions.single_task``.
 """
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
+from ecs_ecommerce_data_pipeline_spark.functions import single_task
 from ecs_ecommerce_data_pipeline_spark.operators import similarity
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
+from .test_single_task_gate import (
+    DISTRIBUTED,
+    KERNEL,
+    _decisions,
+    _fps_rows,
+    assert_single_task_and_distributed_equal,
+)
 
 
 @pytest.fixture()
@@ -20,41 +30,23 @@ def fx(spark):
     return _clustered_fx(spark, SF)
 
 
-def _rows(df):
-    return [
-        (r.cluster_id, r.seed_vid, tuple(r.centroid))
-        for r in df.orderBy("cluster_id").collect()
-    ]
-
-
-def test_fast_path_matches_distributed_chain(fx, monkeypatch):
-    fast = _rows(similarity.farthest_point_seeds(fx, k=16))
-    monkeypatch.setenv("SPARK_GRAFT_FPS_SINGLE_TASK_DOUBLES", "0")
-    slow = _rows(similarity.farthest_point_seeds(fx, k=16))
-    assert len(fast) == 16
-    # bit-identical: ids, pick order AND centroid doubles
-    assert fast == slow
-
-
-def test_fast_path_k_exceeds_rows(spark):
-    small = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(5)], "vec_id bigint, embedding array<double>"
+def test_fast_path_matches_distributed_chain(fx, monkeypatch, caplog):
+    out = assert_single_task_and_distributed_equal(
+        lambda: _fps_rows(similarity.farthest_point_seeds(fx, k=16)),
+        monkeypatch,
+        caplog,
     )
-    out = _rows(similarity.farthest_point_seeds(small, k=8))
-    assert len(out) == 5
-    assert out[0][1] == 0  # seed_0 = smallest id
-    assert sorted(r[0] for r in out) == list(range(5))
+    assert len(out) == 16
 
 
-def test_dispatch_threshold_env(fx, monkeypatch):
-    # threshold 0 => distributed chain; sanity: same first two picks
+def test_dispatch_threshold_env(fx, monkeypatch, caplog):
+    # The retired SPARK_GRAFT_FPS_SINGLE_TASK_DOUBLES no longer moves the
+    # dispatch; only the byte ceiling does, and both paths pick the same.
+    caplog.set_level(logging.DEBUG, logger=single_task.__name__)
     monkeypatch.setenv("SPARK_GRAFT_FPS_SINGLE_TASK_DOUBLES", "0")
-    slow = _rows(similarity.farthest_point_seeds(fx, k=2))
-    monkeypatch.delenv("SPARK_GRAFT_FPS_SINGLE_TASK_DOUBLES")
-    fast = _rows(similarity.farthest_point_seeds(fx, k=2))
+    fast = _fps_rows(similarity.farthest_point_seeds(fx, k=2))
+    assert _decisions(caplog) == [("farthest_point_seeds", KERNEL)]
+    monkeypatch.setattr(single_task, "SINGLE_TASK_BYTES", 0)
+    slow = _fps_rows(similarity.farthest_point_seeds(fx, k=2))
+    assert _decisions(caplog) == [("farthest_point_seeds", DISTRIBUTED)]
     assert fast == slow and len(fast) == 2
-
-
-def test_empty_input(spark):
-    empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    assert similarity.farthest_point_seeds(empty, k=4).count() == 0

@@ -63,15 +63,8 @@ def _fps_rows(df):
     ]
 
 
-def fps_k16_clustered(spark):
-    from ecs_ecommerce_data_pipeline_spark.queries.similarity_q import _clustered_fx
-
-    fx = _clustered_fx(spark, SF)
-    return lambda: _fps_rows(similarity.farthest_point_seeds(fx, k=16))
-
-
-def check_fps_k16_clustered(out):
-    assert len(out) == 16
+# The clustered k=16 case and the dispatch test live in
+# test_round11_fps_fastpath.py, on the helpers above.
 
 
 def fps_k_exceeds_rows(spark):
@@ -238,7 +231,6 @@ def check_cc_path_diameter_9(out):
 
 
 CASES = [
-    (fps_k16_clustered, check_fps_k16_clustered),
     (fps_k_exceeds_rows, check_fps_k_exceeds_rows),
     (kpar_stats_and_candidates, check_kpar_stats_and_candidates),
     (kpar_small, check_kpar_small),
